@@ -13,9 +13,12 @@ README-documented expectation policies:
   inline during a model build via :func:`expect`.
 
 Pass criterion everywhere: the violation query returns 0 rows.
-At scale the count is bounded with ``limit(n+1)`` so a check never
-scans more than it must once violations exist; the violation DataFrame
-itself is lazy and fully pushdown-optimizable.
+A row-predicate check (``not_null``, ``accepted_values``) also carries
+its violation ``condition``; :meth:`Engine.test` counts every such check
+of one relation in a single scan, and only a check with violations then
+fetches its sample through ``limit(n+1)``.  Every other check runs its
+own ``limit(n+1)`` query, which stops early once violations exist but,
+like any passing check, reads its whole input when there are none.
 """
 
 from __future__ import annotations
@@ -28,7 +31,7 @@ from typing import TYPE_CHECKING, Any
 from pyspark.sql import functions as F
 
 if TYPE_CHECKING:  # pragma: no cover
-    from pyspark.sql import DataFrame
+    from pyspark.sql import Column, DataFrame
     from .runner import Engine
 
 
@@ -49,15 +52,38 @@ class CheckResult:
 
 @dataclass
 class Check:
-    """A named violation query over a materialized relation."""
+    """A named violation query over a materialized relation.
+
+    ``condition``, when given, is the row-level violation predicate as a
+    zero-argument callable returning a Column — built on each use, so no
+    JVM handle outlives its session.  The builder is then derived from
+    it (``df.filter(condition())``), and :meth:`Engine.test` can count
+    the check together with the relation's other condition checks."""
     name: str
     relation: str            # qualified model name the check targets
-    builder: Callable[["DataFrame"], "DataFrame"]
+    builder: Callable[["DataFrame"], "DataFrame"] | None = None
+    condition: Callable[[], "Column"] | None = None
+
+    def __post_init__(self) -> None:
+        if self.builder is None:
+            if self.condition is None:
+                raise ValueError(f"check {self.name}: needs a builder "
+                                 f"or a condition")
+            cond = self.condition
+            self.builder = lambda df: df.filter(cond())
 
     def violations(self, engine: "Engine") -> "DataFrame":
         return self.builder(engine.table(self.relation))
 
-    def run(self, engine: "Engine", max_sample: int = 5) -> CheckResult:
+    def run(self, engine: "Engine", max_sample: int = 5,
+            n_violations: int | None = None) -> CheckResult:
+        """Evaluate the check.  ``n_violations`` is a violation count the
+        caller already holds (Engine.test's shared per-relation count):
+        0 passes without a query; otherwise the sample is fetched as
+        usual, so the result is the same either way."""
+        if n_violations == 0:
+            return CheckResult(name=self.name, passed=True, violations=0,
+                               sample=[])
         rows = self.violations(engine).limit(max_sample + 1).collect()
         return CheckResult(
             name=self.name, passed=not rows, violations=len(rows),
@@ -70,7 +96,7 @@ def not_null(relation: str, column: str) -> Check:
     """iot_events_models.yml:9-27 — violation = rows with NULL column."""
     return Check(
         name=f"not_null__{relation}__{column}", relation=relation,
-        builder=lambda df: df.filter(F.col(column).isNull()))
+        condition=lambda: F.col(column).isNull())
 
 
 def unique(relation: str, column: str) -> Check:
@@ -92,8 +118,8 @@ def accepted_values(relation: str, column: str,
     vals = list(values)
     return Check(
         name=f"accepted_values__{relation}__{column}", relation=relation,
-        builder=lambda df: df.filter(
-            (~F.col(column).isin(vals)) & F.col(column).isNotNull()))
+        condition=lambda: (~F.col(column).isin(vals))
+        & F.col(column).isNotNull())
 
 
 def relationship(relation: str, column: str, to_relation: str,

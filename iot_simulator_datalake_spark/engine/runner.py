@@ -18,8 +18,10 @@ Materializations (dbt_project.yml:11-19):
                         streaming/runner.py
 
 Independent models materialize concurrently (thread pool over DAG waves
-⇔ dbt ``threads: 8``, profiles.yml:14).  Spark's scheduler interleaves
-their jobs.
+⇔ dbt ``threads: 8``, profiles.yml:14), and so do the checks of
+``test``.  Spark's scheduler interleaves their jobs; each pool task
+inherits the caller's Spark local properties, so a job group set around
+``run``/``test`` covers (and ``cancelJobGroup`` cancels) every job.
 """
 
 from __future__ import annotations
@@ -28,10 +30,14 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from pathlib import Path
 from typing import TYPE_CHECKING, Any
+
+from pyspark import inheritable_thread_target
+from pyspark.sql import functions as F
 
 from .checks import Check, CheckResult
 from .model import Model, ModelContext, Registry
@@ -262,8 +268,12 @@ class Engine:
                         deferred.append((vdir, path))
                     # register OUR version dir, not the symlink: this
                     # run's downstream reads stay consistent even if a
-                    # concurrent run retargets the link mid-query
-                    df = self.spark.read.parquet(str(vdir))
+                    # concurrent run retargets the link mid-query.  Read
+                    # it with the schema just written: no footer-
+                    # inference job, and partition values parse as their
+                    # written type
+                    df = self.spark.read.schema(df.schema).parquet(
+                        str(vdir))
         self.register(m.qualified_name, df)
 
     def run(self, select: list[str] | None = None,
@@ -296,18 +306,24 @@ class Engine:
                 _install_version(vdir, path)
         return result
 
+    def _map(self, fn: Callable, items: list) -> list:
+        """``[fn(x) for x in items]`` on the ``threads`` pool (inline for
+        a single item).  Tasks inherit the caller's Spark local
+        properties — job group, scheduler pool, tags — which plain pool
+        threads would otherwise lose."""
+        if len(items) <= 1:
+            return [fn(x) for x in items]
+        target = inheritable_thread_target(self.spark)(fn)
+        with ThreadPoolExecutor(max_workers=self.threads) as pool:
+            return list(pool.map(target, items))
+
     def _run_waves(self, select, deferred, result: RunResult) -> None:
         for wave in self.registry.levels(select):
             def one(m: Model) -> tuple[str, float]:
                 t0 = time.monotonic()
                 self._materialize(m, deferred)
                 return m.qualified_name, time.monotonic() - t0
-            if len(wave) == 1:
-                outs = [one(wave[0])]
-            else:
-                with ThreadPoolExecutor(max_workers=self.threads) as pool:
-                    outs = list(pool.map(one, wave))
-            for qn, dt in outs:
+            for qn, dt in self._map(one, wave):
                 result.materialized.append(qn)
                 result.seconds[qn] = dt
 
@@ -384,11 +400,41 @@ class Engine:
         """Run every registered check; pass ⇔ violation query returns 0
         rows (the reference's universal criterion, SURVEY §5.1).
 
+        Condition checks (``not_null``, ``accepted_values``) on the same
+        relation share one scan: a single ``agg(count_if(cond), …)`` job
+        counts all their violations, a check counting 0 passes with no
+        query of its own, and only a failing one fetches its sample
+        (``limit(max_sample+1)``).  A relation with one condition check
+        just runs it.  Every other check runs its own query.  Relations
+        and checks run concurrently on the ``threads`` pool, each check
+        still through :meth:`Check.run`; the results are exactly those
+        of running each check in turn, in registration order.
+
         ``persist=True`` appends one audit row per check to
         ``<warehouse>/_audit/check_results`` (⇔ dbt's test-result
         artifacts), so quality history survives across runs.
         """
-        results = [c.run(self, max_sample=max_sample) for c in self.checks]
+        # one task per relation's condition checks, one per other check,
+        # in order of first appearance
+        groups: dict[tuple, list[int]] = {}
+        for i, c in enumerate(self.checks):
+            key = ("own", i) if c.condition is None else ("rel", c.relation)
+            groups.setdefault(key, []).append(i)
+        tasks = list(groups.values())
+
+        def task(idx: list[int]) -> list[CheckResult]:
+            checks = [self.checks[i] for i in idx]
+            if len(checks) == 1:
+                return [checks[0].run(self, max_sample=max_sample)]
+            counts = self.table(checks[0].relation).agg(*(
+                F.count_if(c.condition()) for c in checks)).first()
+            return [c.run(self, max_sample=max_sample, n_violations=n)
+                    for c, n in zip(checks, counts)]
+
+        by_index: dict[int, CheckResult] = {}
+        for idx, out in zip(tasks, self._map(task, tasks)):
+            by_index.update(zip(idx, out))
+        results = [by_index[i] for i in range(len(self.checks))]
         if persist and results:
             import time as _time
             audit = self.spark.createDataFrame(

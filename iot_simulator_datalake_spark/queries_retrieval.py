@@ -472,8 +472,9 @@ def hybrid_search_rrf(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     ``bm25_from_postings``, no corpus tokenize at query time; the ANN
     family's broadcast-probe scan — swap in the IVF/LSH route
     unchanged), each
-    cut to depth {depth} BEFORE fusion, so the full-outer fusion join
-    is depth-sized regardless of corpus size, and the fused score is
+    cut to depth {depth} BEFORE fusion, so the fusion — a union of
+    the two rankings' reciprocal terms and one doc_id-keyed aggregate
+    — is depth-sized regardless of corpus size, and the fused score is
     an integer sum of per-ranking reciprocal terms (rank ties are
     impossible by construction, so RRF is bit-stable).
     """

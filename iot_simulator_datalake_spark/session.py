@@ -53,6 +53,51 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def _cgroup_limit_bytes() -> int | None:
+    """The container's memory limit (cgroup v2 ``memory.max`` or v1
+    ``memory.limit_in_bytes``); ``None`` when unlimited or unreadable."""
+    for f in ("/sys/fs/cgroup/memory.max",
+              "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(f) as fh:
+                raw = fh.read().strip()
+        except OSError:
+            continue
+        # "max" (v2) or a page-rounded 2**63 (v1) both mean unlimited
+        if raw.isdigit() and int(raw) < 1 << 60:
+            return int(raw)
+    return None
+
+
+def _mem_available_bytes() -> int | None:
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemAvailable:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return None
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory`` for a local session: ``SPARK_DRIVER_MEM``
+    if set, else half of the smaller of the cgroup limit and
+    ``MemAvailable`` (at least 1 GiB).  In local mode the driver heap is
+    the whole cluster's memory, and the JVM also needs off-heap room and
+    the Python workers theirs, so half of what the machine can give is
+    the default; a constant would either waste a large host or get the
+    JVM OOM-killed on a small one."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    known = [b for b in (_cgroup_limit_bytes(), _mem_available_bytes())
+             if b]
+    if not known:
+        return "4g"
+    return f"{max(1024, min(known) // 2 >> 20)}m"
+
+
 def tune_session(spark: SparkSession,
                  shuffle_partitions: int | None = None) -> SparkSession:
     """Apply runtime-settable confs to an existing session (idempotent).
@@ -88,7 +133,7 @@ def get_spark(app_name: str = "iot_simulator_datalake_spark",
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(n))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", "/tmp/spark-warehouse")
     )

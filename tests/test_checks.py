@@ -3,6 +3,8 @@ expectation policies (P9 warn/drop/fail), partitioned sinks (S9)."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -208,3 +210,76 @@ def test_expect_observed_rejects_fail(spark):
     with pytest.raises(ValueError, match="FAIL"):
         expect_observed(df, "gate", "id >= 0",
                         on_violation=OnViolation.FAIL)
+
+
+# -- Engine.test: one scan per relation, run concurrently ------------------
+
+def _mixed_checks():
+    """Passing and failing condition checks over two relations,
+    interleaved with checks that run their own query."""
+    return [
+        not_null("silver.child", "id"),                       # pass
+        accepted_values("gold.parent", "code", ["a"]),        # fail: b
+        unique("silver.child", "id"),                         # pass
+        not_null("silver.child", "code"),                     # fail: NULL
+        relationship("silver.child", "code", "gold.parent", "code"),
+        not_null("gold.parent", "code"),                      # pass
+        accepted_values("silver.child", "code", ["a", "b"]),  # fail: zz
+        singular("no_negative_totals", "silver.child",
+                 lambda df: df.groupBy("code")
+                 .agg(F.sum("value").alias("v")).filter(F.col("v") < 0)),
+        not_null("silver.child", "value"),                    # pass
+    ]
+
+
+@pytest.mark.parametrize("threads", [8, 1])
+def test_fused_checks_match_one_by_one(eng, threads):
+    eng.threads = threads
+    for c in _mixed_checks():
+        eng.add_check(c)
+    expected = [c.run(eng) for c in eng.checks]
+    assert [r.passed for r in expected] == [
+        True, False, True, False, False, True, False, False, True]
+    assert eng.test() == expected
+
+
+def _group_jobs(spark, group: str, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_passing_condition_checks_share_one_job(spark, tmp_path):
+    """Four passing condition checks on one relation cost exactly the
+    jobs of one count_if aggregate (the scan plus, under AQE, its final
+    stage), not one query each."""
+    r = Registry()
+
+    @model(r, name="t", layer="silver", materialization="table")
+    def t(ctx):
+        return ctx.spark.createDataFrame(
+            [(i, f"c{i % 3}", float(i)) for i in range(50)],
+            "id int, code string, value double")
+
+    e = Engine(spark, r, warehouse=tmp_path / "wh")
+    e.run()
+    for c in (not_null("silver.t", "id"), not_null("silver.t", "code"),
+              not_null("silver.t", "value"),
+              accepted_values("silver.t", "code", ["c0", "c1", "c2"])):
+        e.add_check(c)
+    uid = uuid.uuid4().hex
+    fused = _group_jobs(spark, f"fused-{uid}", lambda: e.test())
+    one_agg = _group_jobs(
+        spark, f"agg-{uid}",
+        lambda: e.table("silver.t").agg(F.count_if(F.lit(False))).first())
+    one_by_one = _group_jobs(
+        spark, f"each-{uid}", lambda: [c.run(e) for c in e.checks])
+    assert all(res.passed for res in e.test())
+    assert fused == one_agg
+    assert fused < one_by_one
+

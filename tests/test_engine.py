@@ -314,3 +314,34 @@ def test_select_graph_operators():
     # '+name' is accepted as an explicit spelling of the default
     explicit = {m.qualified_name for m in r.toposort(["+silver.mid"])}
     assert explicit == plain
+
+
+def test_wave_jobs_inherit_callers_job_group(spark, tmp_path):
+    """A parallel wave's pool threads keep the caller's Spark local
+    properties: a job group set around run() covers both models' jobs
+    (so cancelJobGroup reaches them) and no wave job runs ungrouped."""
+    import uuid
+    r = Registry()
+    seen: dict[str, str | None] = {}
+
+    def table_model(name: str) -> None:
+        @model(r, name=name, layer="gold", materialization="table")
+        def build(ctx):
+            seen[name] = ctx.spark.sparkContext.getLocalProperty(
+                "spark.jobGroup.id")
+            return ctx.spark.range(100).withColumn("v", F.col("id") % 7)
+
+    table_model("a")
+    table_model("b")
+    sc, group = spark.sparkContext, f"wave-{uuid.uuid4().hex}"
+    tracker = sc.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "two-model wave")
+    try:
+        Engine(spark, r, warehouse=tmp_path / "wh").run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert seen == {"a": group, "b": group}
+    assert len(tracker.getJobIdsForGroup(group)) >= 2   # one write each
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped_before == set()

@@ -8,6 +8,7 @@ coverage), and determinism.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from iot_simulator_datalake_spark.functions.text import tokens
@@ -199,3 +200,38 @@ def test_boilerplate_removal_empty_and_all_removed_docs(spark, tmp_path):
     for k, r in rows.items():
         assert (r["n_chunks"], r["n_removed"], r["clean_md5"]) == \
             (oracle[k][1], oracle[k][2], oracle[k][3]), k
+
+
+def _table_models(reg):
+    return [m for m in reg if m.materialization == "table"
+            and m.snapshot_keep is None and not m.bucket_by]
+
+
+@pytest.mark.parametrize("which", ["iot", "curation", "corpus"])
+def test_table_read_back_schema_matches_inference(spark, tmp_path,
+                                                  iot_landing, which):
+    """The engine reads a table's version dir back with the schema it
+    just wrote; that must be the schema footer inference would give
+    (session confs such as inferTimestampNTZ=false included)."""
+    from iot_simulator_datalake_spark.engine import Engine
+    from iot_simulator_datalake_spark.pipeline import build_registry
+    from iot_simulator_datalake_spark.pipeline.corpus_models import (
+        build_corpus_registry)
+    from iot_simulator_datalake_spark.pipeline.curation_models import (
+        build_curation_registry)
+
+    docs = {"documents_path": f"{SF}/documents.parquet"}
+    reg, cfg = {
+        "iot": (build_registry(streaming=False),
+                {"iot_events_path": str(iot_landing[0])}),
+        "curation": (build_curation_registry(), docs),
+        "corpus": (build_corpus_registry(), docs),
+    }[which]
+    e = Engine(spark, reg, config=cfg, warehouse=tmp_path / "wh")
+    e.run()
+    models = _table_models(reg)
+    assert models
+    for m in models:
+        vdir = e.table_path(m).resolve()
+        assert e.table(m.qualified_name).schema == \
+            spark.read.parquet(str(vdir)).schema, m.qualified_name

@@ -514,3 +514,24 @@ def test_ivfpq_residual_matches_true_within_cell_distance(spark):
     again = REGISTRY["similarity_topk_ivfpq_residual"].fn(spark, SF) \
         .collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
+
+
+def test_q5_selective_first_branch_matches_default(spark, monkeypatch):
+    """tpch_q5_local_volume picks its join order from maybe_broadcast's
+    gate on customer.  Test data always takes the broadcast-chain
+    branch; a zero gate forces the selective-first branch that runs at
+    scale, which must return the same rows."""
+    from iot_simulator_datalake_spark.queries import REGISTRY
+    q5 = REGISTRY["tpch_q5_local_volume"].fn
+
+    def plan_and_rows():
+        df = q5(spark, SF)
+        return (df._jdf.queryExecution().optimizedPlan().toString(),
+                sorted(tuple(r) for r in df.collect()))
+
+    monkeypatch.delenv("SPARK_GRAFT_BROADCAST_GATE", raising=False)
+    default_plan, default_rows = plan_and_rows()
+    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_GATE", "0")
+    gated_plan, gated_rows = plan_and_rows()
+    assert gated_plan != default_plan       # the other branch really ran
+    assert default_rows and gated_rows == default_rows

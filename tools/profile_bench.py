@@ -34,7 +34,7 @@ from pyspark.sql import SparkSession  # noqa: E402
 from iot_simulator_datalake_spark.actions import full_mat  # noqa: E402
 from iot_simulator_datalake_spark.queries import REGISTRY  # noqa: E402
 from iot_simulator_datalake_spark.session import (  # noqa: E402
-    RUNTIME_CONFS, default_parallelism, tune_session)
+    RUNTIME_CONFS, default_parallelism, driver_memory, tune_session)
 
 LOG_DIR = "/tmp/spark-events-profile"
 
@@ -46,8 +46,7 @@ def get_profiling_spark() -> SparkSession:
         SparkSession.builder.master(f"local[{n}]")
         .appName("profile_bench")
         .config("spark.sql.shuffle.partitions", str(n))
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.eventLog.enabled", "true")
         .config("spark.eventLog.dir", LOG_DIR)
