@@ -1,8 +1,23 @@
-"""Benchmark harness: runs the headline declared queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
+"""Benchmark harness for the declared queries at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 test data, :func:`_sf`) on local[$SPARK_GRAFT_CPUS].
+Every mode prints ONE JSON line on stdout (progress goes to stderr):
 
-Each query is built lazily and executed via ``count()`` — the same
+    python bench.py                    headline timings (main)
+    python bench.py q1 q2 ...          per-pass walls and CPU steal
+    python bench.py --profile [q ...]  the same, plus each timed pass's
+                                       Spark jobs and stages
+    python bench.py --plans DIR [q ...]  DIR/<q>.txt: formatted physical
+                                         plan (default: headline queries)
+    python bench.py --scaling 1,2,4    headline run per core count and
+                                       per-query core ratios
+    python bench.py --dag              concurrent-DAG materialization
+
+The scale factor comes only from $SPARK_GRAFT_SF_DIR: a scale ratio is
+two runs with different dirs, divided.  All timing modes share one
+per-query loop, :func:`time_queries`: an untimed warm-up pass, then
+three timed passes, each recording wall seconds and host CPU steal.
+
+Each query is built fresh and executed via ``count()`` — the same
 action every prior round's baseline used, so totals stay comparable.
 The known hazard with count() is that Catalyst can ELIMINATE a
 join whose output nobody consumes (the semdedup ×100 probe trap —
@@ -23,18 +38,20 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
+from pathlib import Path
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-# full_mat is shared with tools/probe_scale.py so bench and probes time
-# the SAME action (the helper's module docstring has the join-pruning
-# rationale).
 from iot_simulator_datalake_spark.actions import full_mat  # noqa: E402
 from iot_simulator_datalake_spark.queries import REGISTRY  # noqa: E402
 from iot_simulator_datalake_spark.session import get_spark  # noqa: E402
+
+#: timed passes per query; the headline reports their median
+PASSES = 3
 
 
 def calibration_sec(reps: int = 3) -> float:
@@ -99,43 +116,195 @@ BASELINE_SUBSET = (
     "tpch_q5_local_volume", "window_running_total")
 
 
-def main() -> None:
+def _sf() -> tuple[str, float | str]:
+    """($SPARK_GRAFT_SF_DIR, its scale factor as the JSON reports it)."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    return sf_dir, float(sf) if sf.replace(".", "").isdigit() else sf
+
+
+def steal_jiffies() -> int:
+    """Host CPU-steal jiffies so far (/proc/stat, cpu line, field 8): a
+    per-pass delta shows a co-tenant burst that the single-threaded
+    calibration sentinel misses."""
+    with open("/proc/stat") as f:
+        return int(f.readline().split()[8])
+
+
+def _job_tag(name: str, i: int) -> str:
+    return f"bench:{name}:pass{i}"
+
+
+def time_queries(spark, names: list[str], sf_dir: str) -> dict[str, dict]:
+    """The one per-query timing loop: {name: {"walls", "steals",
+    "full_mat"}}, one wall (seconds, build + action) and one steal delta
+    per timed pass.
+
+    Warm-up: one untimed pass of every query pays JVM/JIT/codegen
+    compilation and file-listing costs, so the timed passes measure
+    steady-state execution — what a long-lived cluster actually sees —
+    and decides each query's action (module docstring).  Then PASSES
+    timed passes over all queries; plans are rebuilt fresh each pass, no
+    DataFrame/cache reuse.  Each timed pass's jobs carry the description
+    ``bench:<name>:pass<i>`` (set outside the timed window), which
+    :func:`job_profile` reads back."""
+    out = {}
+    for name in names:
+        df = REGISTRY[name].fn(spark, sf_dir)
+        fm = not count_is_faithful(df)
+        full_mat(df) if fm else df.count()
+        out[name] = {"walls": [], "steals": [], "full_mat": fm}
+    sc = spark.sparkContext
+    for i in range(PASSES):
+        for name in names:
+            sc.setJobDescription(_job_tag(name, i))
+            s0, t0 = steal_jiffies(), time.monotonic()
+            df = REGISTRY[name].fn(spark, sf_dir)
+            n = full_mat(df) if out[name]["full_mat"] else df.count()
+            dt = round(time.monotonic() - t0, 3)
+            out[name]["walls"].append(dt)
+            out[name]["steals"].append(steal_jiffies() - s0)
+            print(f"# pass{i} {name}: {n} rows in {dt:.2f}s",
+                  file=sys.stderr)
+    sc.setJobDescription(None)
+    return out
+
+
+def _span_sec(x) -> float | None:
+    """Seconds from submission to completion of a status-store job or
+    stage; None while either time is unset."""
+    start, end = x.submissionTime(), x.completionTime()
+    if not (start.isDefined() and end.isDefined()):
+        return None
+    return round((end.get().getTime() - start.get().getTime()) / 1000.0, 3)
+
+
+def job_profile(spark, names: list[str]) -> dict[str, list[dict]]:
+    """{name: [job, ...]} for the timed passes of :func:`time_queries`,
+    read from the live application status store (no event log): each
+    job with its pass, seconds and executed stages — name, seconds,
+    tasks, executor run time, input, shuffle read/write and spill
+    bytes.  Stages skipped for a reused exchange are left out."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    tags = {_job_tag(n, i): (n, i) for n in names for i in range(PASSES)}
+    out: dict[str, list[dict]] = {n: [] for n in names}
+    jobs = store.jobsList(None).iterator()
+    while jobs.hasNext():
+        job = jobs.next()
+        desc = job.description()
+        hit = tags.get(desc.get()) if desc.isDefined() else None
+        if hit is None:
+            continue
+        stages, sids = [], job.stageIds().iterator()
+        while sids.hasNext():
+            st = store.lastStageAttempt(sids.next())
+            if st.status().toString() == "SKIPPED":
+                continue
+            stages.append({
+                "stage_id": st.stageId(), "name": st.name(),
+                "status": st.status().toString(),
+                "sec": _span_sec(st),
+                "tasks": st.numTasks(),
+                "executor_run_ms": st.executorRunTime(),
+                "input_bytes": st.inputBytes(),
+                "shuffle_read_bytes": st.shuffleReadBytes(),
+                "shuffle_write_bytes": st.shuffleWriteBytes(),
+                "spill_bytes": (st.memoryBytesSpilled() +
+                                st.diskBytesSpilled())})
+        out[hit[0]].append({
+            "job_id": job.jobId(), "pass": hit[1],
+            "status": job.status().toString(),
+            "sec": _span_sec(job),
+            "stages": sorted(stages, key=lambda s: s["stage_id"])})
+    for jl in out.values():
+        jl.sort(key=lambda j: j["job_id"])
+    return out
+
+
+def write_plans(spark, names: list[str], sf_dir: str, outdir: Path
+                ) -> dict[str, str]:
+    """Write each query's formatted physical plan (the shared
+    ``plan_lint.plan_text`` capture) to ``outdir/<name>.txt``; returns
+    {name: path}."""
+    from tools.plan_lint import plan_text
+
+    outdir.mkdir(parents=True, exist_ok=True)
+    paths = {}
+    for name in names:
+        path = outdir / f"{name}.txt"
+        path.write_text(plan_text(REGISTRY[name].fn(spark, sf_dir)))
+        paths[name] = str(path)
+    return paths
+
+
+class BenchOutputError(RuntimeError):
+    """A bench.py run exited cleanly but printed no JSON result line."""
+
+
+def scaling_ledger(stdouts: dict[int, str]) -> dict:
+    """Core-count ledger from headline runs' stdout, keyed by
+    SPARK_GRAFT_CPUS: per-query ratio t_low/t_high between the lowest
+    and highest count, totals, and every run's JSON.  A query timed at
+    0.0 s on either side has no ratio and is listed under
+    ``zero_time_queries`` instead."""
+    runs = {}
+    for cpus, stdout in stdouts.items():
+        lines = [ln for ln in stdout.splitlines() if ln.startswith("{")]
+        if not lines:
+            raise BenchOutputError(
+                f"bench.py at SPARK_GRAFT_CPUS={cpus} printed no JSON line")
+        runs[cpus] = json.loads(lines[-1])
+    lo, hi = min(runs), max(runs)
+    ratios, zero = {}, []
+    for q, t_hi in runs[hi]["queries"].items():
+        t_lo = runs[lo]["queries"][q]
+        if t_lo and t_hi:
+            ratios[q] = round(t_lo / t_hi, 2)
+        else:
+            zero.append(q)
+    return {"cpus": sorted(runs), "ratio_low_over_high": ratios,
+            "zero_time_queries": zero,
+            "total_sec": {c: r["value"] for c, r in runs.items()},
+            "runs": runs}
+
+
+def scaling(cpus_list: list[int]) -> None:
+    """``--scaling``: re-run the headline bench in a fresh process per
+    core count (the master is fixed at context creation) and print
+    :func:`scaling_ledger`, plus each run's wall and CPU steal so a
+    contended window is visible.  Counts above the host's cores measure
+    oversubscription, not scaling; at sf0.1 every query is dominated by
+    fixed overhead, so run it on a ×N replica (tools/replica.py)."""
+    stdouts, host = {}, {}
+    for cpus in cpus_list:
+        env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus))
+        s0, t0 = steal_jiffies(), time.monotonic()
+        stdouts[cpus] = subprocess.run(
+            [sys.executable, os.path.abspath(__file__)], env=env,
+            stdout=subprocess.PIPE, text=True, check=True).stdout
+        host[cpus] = {"wall_sec": round(time.monotonic() - t0, 1),
+                      "steal_jiffies": steal_jiffies() - s0}
+    ledger = scaling_ledger(stdouts)
+    ledger.update(sf_dir=_sf()[0], host=host)
+    print(json.dumps(ledger))
+
+
+def main() -> None:
+    """Headline run: every ``bench=True`` query through
+    :func:`time_queries`, reported as the MEDIAN of the timed passes per
+    query: local[N] on a shared host is noisy (GC, co-tenants); the
+    median is robust to a one-off stall in either direction, unlike
+    best-of-n (which drifts optimistic) or mean (which one stall
+    corrupts)."""
+    sf_dir, sf = _sf()
     calib_start, load_start = calibration_sec(), _loadavg()
     spark = get_spark("bench")
 
     names = [n for n, qd in REGISTRY.items() if qd.bench]
-
-    # Warm-up: one untimed pass of every benched query pays JVM/JIT/
-    # codegen compilation and file-listing costs, so the timed pass
-    # measures steady-state query execution — what a long-lived cluster
-    # actually sees (plans are rebuilt fresh; no DataFrame caching).
-    needs_full_mat: set = set()
-    for name in names:
-        df = REGISTRY[name].fn(spark, sf_dir)
-        if not count_is_faithful(df):
-            needs_full_mat.add(name)
-            full_mat(df)
-        else:
-            df.count()
-
-    # Three timed passes, report the MEDIAN per query: local[N] on a
-    # shared host is noisy (GC, co-tenants); the median is robust to a
-    # one-off stall in either direction, unlike best-of-n (which drifts
-    # optimistic) or mean (which one stall corrupts).  Plans are
-    # rebuilt fresh each pass — no DataFrame/cache reuse.
-    passes: dict[str, list[float]] = {n: [] for n in names}
-    for _pass in range(3):
-        for name in names:
-            qd = REGISTRY[name]
-            t0 = time.monotonic()
-            df = qd.fn(spark, sf_dir)
-            n = full_mat(df) if name in needs_full_mat else df.count()
-            dt = round(time.monotonic() - t0, 3)
-            passes[name].append(dt)
-            print(f"# pass{_pass} {name}: {n} rows in {dt:.2f}s",
-                  file=sys.stderr)
+    runs = time_queries(spark, names, sf_dir)
+    passes = {n: r["walls"] for n, r in runs.items()}
     timings = {n: sorted(ts)[len(ts) // 2] for n, ts in passes.items()}
     # variance-aware protocol (VERDICT r10 #2): the JSON carries each
     # query's [min, median, max] across the 3 passes, plus the subset
@@ -170,8 +339,9 @@ def main() -> None:
         # timings as a regression or a win
         "calibration_sec": {"start": calib_start, "end": calib_end},
         "loadavg": {"start": load_start, "end": load_end},
-        "full_mat_queries": sorted(needs_full_mat),
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "full_mat_queries": sorted(n for n, r in runs.items()
+                                   if r["full_mat"]),
+        "sf": sf,
     }))
 
 
@@ -195,8 +365,7 @@ def dag_bench() -> None:
     from iot_simulator_datalake_spark.queries_pipeline import (
         _export_landing)
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    sf_dir, sf = _sf()
     calib_start = calibration_sec()
     spark = get_spark("bench-dag")
     workdir = _export_landing(spark, sf_dir)   # one landing, all runs
@@ -239,12 +408,46 @@ def dag_bench() -> None:
         "aggregation": "median_of_3",
         "calibration_sec": {"start": calib_start,
                             "end": calibration_sec()},
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "sf": sf,
     }))
 
 
-if __name__ == "__main__":
-    if "--dag" in sys.argv:
+USAGE = ("usage: bench.py [q ...] | --profile [q ...] | --plans DIR [q ...]"
+         " | --scaling 1,2,4 | --dag")
+
+
+def cli(argv: list[str]) -> int:
+    if "--dag" in argv:
         dag_bench()
-    else:
+        return 0
+    if argv[:1] == ["--scaling"]:
+        scaling([int(c) for c in (argv[1:2] or ["1,2,4"])[0].split(",")])
+        return 0
+    mode, outdir = None, None
+    if argv[:1] == ["--profile"]:
+        mode, argv = "profile", argv[1:]
+    elif argv[:1] == ["--plans"] and len(argv) > 1:
+        mode, outdir, argv = "plans", Path(argv[1]), argv[2:]
+    if not argv and mode is None:
         main()
+        return 0
+    bad = [n for n in argv if n not in REGISTRY]
+    if bad:
+        print(f"unknown queries: {bad}\n{USAGE}", file=sys.stderr)
+        return 2
+    names = argv or [n for n, qd in REGISTRY.items() if qd.bench]
+    sf_dir = _sf()[0]
+    spark = get_spark("bench")
+    if mode == "plans":
+        out = write_plans(spark, names, sf_dir, outdir)
+    else:
+        out = time_queries(spark, names, sf_dir)
+        if mode == "profile":
+            for name, jobs in job_profile(spark, names).items():
+                out[name]["jobs"] = jobs
+    print(json.dumps(out))
+    return 0
+
+
+if __name__ == "__main__":
+    raise SystemExit(cli(sys.argv[1:]))

@@ -32,6 +32,19 @@ Everything is designed for a multi-executor cluster at ~100 TB even though
 tests run on local[*]: explicit broadcasts for small dims, partition-count
 discipline, map-side-combinable aggregations, LSH banding instead of
 cross joins.
+
+Construction memos: query construction is driver latency (every
+``F.*`` call is a py4j round-trip, every bare ``spark.read.parquet`` a
+footer-inference job), so the values a build recomputes identically
+are memoized per process with ``functools.cache``, each behind a small
+function keyed only on what determines it: a Column expression on its
+parameters and column names, a table's schema on its parquet path, the
+BM25 index metadata on its content-addressed root.  A memoized Column
+is an unresolved, alias-free expression tree (callers alias, so each
+plan gets fresh exprIds) and metadata is of immutable inputs; neither
+is data or a result.  Entries live for the process: PySpark keeps one
+py4j gateway per process, so they stay valid across ``spark.stop()``
+and a rebuilt session (tests/test_memo.py).
 """
 
 __version__ = "0.1.0"

@@ -1,11 +1,12 @@
-"""Plan-faithful actions shared by bench.py and tools/probe_scale.py.
+"""Plan-faithful action for timing harnesses (bench.py; the legacy
+subset in perfbench).
 
 A bare ``df.count()`` lets Catalyst ELIMINATE unique-key joins whose
 output columns nobody consumes, so a timing harness can "measure" a
 join-pruned no-op plan (this bit the first semdedup ×100 probe; see
-SCALE.md).  Both harnesses must execute the SAME action for bench
-timings and replica-probe ratios to describe the same work — keeping
-the helper in one place is what guarantees that.
+SCALE.md).  Every harness must execute the SAME action for headline
+timings and scale ratios to describe the same work — keeping the
+helper in one place is what guarantees that.
 """
 
 from __future__ import annotations

@@ -13,6 +13,8 @@ faster than a Python round-trip and keeps whole-stage codegen intact.
 
 from __future__ import annotations
 
+from functools import cache
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -21,48 +23,27 @@ def _as_double(v: Column) -> Column:
     return v.cast("array<double>")
 
 
-#: Per-process memo of NAME-KEYED vector expressions (optimization
-#: r12, same pattern/lifecycle as operators.dedup._EXPR_MEMO): the
-#: zip_with/aggregate folds cost real py4j latency to BUILD —
-#: measured 129 ms per cosine_micro and 35 ms per l2_norm — and the
-#: similarity operators rebuild them on every query construction.
-#: Expressions here are unresolved, alias-free (callers alias), and
-#: reference only the given column names, so reuse across plans is
-#: safe.
-_EXPR_MEMO: dict = {}
-
-
+@cache  # construction memo (package docstring)
 def l2_norm_named(col_name: str) -> Column:
-    """l2_norm over a named column — memoized per name."""
-    key = ("l2", col_name)
-    c = _EXPR_MEMO.get(key)
-    if c is None:
-        c = _EXPR_MEMO[key] = l2_norm(F.col(col_name))
-    return c
+    """l2_norm over a named column."""
+    return l2_norm(F.col(col_name))
 
 
+@cache  # construction memo (package docstring)
 def cosine_micro_named(a_name: str, b_name: str) -> Column:
-    """cosine_micro over two named columns — memoized per name pair."""
-    key = ("cosu", a_name, b_name)
-    c = _EXPR_MEMO.get(key)
-    if c is None:
-        c = _EXPR_MEMO[key] = cosine_micro(F.col(a_name), F.col(b_name))
-    return c
+    """cosine_micro over two named columns."""
+    return cosine_micro(F.col(a_name), F.col(b_name))
 
 
+@cache  # construction memo (package docstring)
 def scored_units_named(a_name: str, b_name: str,
                        a_norm: str, b_norm: str) -> Column:
     """to_units(dot(a, b) / (a_norm · b_norm), 6) over named columns —
-    the brute-force scorer's expression, memoized per name tuple
-    (norms are precomputed per side, so the pair loop runs ONE fold)."""
+    the brute-force scorer's expression (norms are precomputed per
+    side, so the pair loop runs ONE fold)."""
     from .units import to_units
-    key = ("score_u", a_name, b_name, a_norm, b_norm)
-    c = _EXPR_MEMO.get(key)
-    if c is None:
-        c = _EXPR_MEMO[key] = to_units(
-            dot(F.col(a_name), F.col(b_name)) /
-            (F.col(a_norm) * F.col(b_norm)), 6)
-    return c
+    return to_units(dot(F.col(a_name), F.col(b_name)) /
+                    (F.col(a_norm) * F.col(b_norm)), 6)
 
 
 def dot(a: Column, b: Column) -> Column:

@@ -22,8 +22,10 @@ from __future__ import annotations
 
 from collections.abc import Callable
 from dataclasses import dataclass
+from functools import cache
 from typing import TYPE_CHECKING
 
+from pyspark.sql import SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -31,38 +33,27 @@ from .operators.hints import maybe_broadcast
 from .session import tune_session
 
 if TYPE_CHECKING:  # pragma: no cover
-    from pyspark.sql import DataFrame, SparkSession
+    from pyspark.sql import DataFrame
 
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
 
 
-#: (sf_dir, table) → inferred schema, memoized for the process lifetime
-#: (optimization r11).  Every bare ``spark.read.parquet`` runs a
-#: 1-task footer-read JOB at DataFrame-construction time to infer the
-#: schema; a 6-table query paid six of those serial ~35 ms jobs (plus
-#: scheduling gaps) per build, three builds per bench run.  Passing an
-#: explicit schema skips the job entirely.  This memoizes METADATA
-#: only (the schema a catalog/metastore would serve at production
-#: scale — the driver's tables are immutable fixtures), never data or
-#: results; the first read of each table still infers from the footer,
-#: so the nanosAsLong/NTZ dtype branches below see exactly what bare
-#: inference would see.
-_SCHEMA_MEMO: dict = {}
+@cache  # construction memo (package docstring)
+def _parquet_schema(path: str):
+    """Inferred schema of a parquet path: the one footer-read job per
+    table and process.  Passing it explicitly lets every later
+    ``spark.read`` skip the 1-task inference job a bare read runs at
+    DataFrame construction (a 6-table query paid six serial ~35 ms jobs
+    per build).  It is inferred from the footer like a bare read, so
+    :func:`load`'s nanosAsLong/NTZ dtype branches see the same types."""
+    return SparkSession.active().read.parquet(path).schema
 
 
 def raw_schema(spark: "SparkSession", sf_dir: str, name: str):
-    """RAW parquet schema of one driver table (pre any ts conversion),
-    served from the same process-lifetime memo as :func:`load` — the
-    streaming twins need it to declare their file-source schema, and
-    re-inferring it per query build paid one footer-read job each
-    (optimization r11)."""
-    path = f"{sf_dir}/{name}.parquet"
-    sch = _SCHEMA_MEMO.get(path)
-    if sch is None:
-        sch = spark.read.parquet(path).schema
-        _SCHEMA_MEMO[path] = sch
-    return sch
+    """RAW parquet schema of one driver table (pre any ts conversion) —
+    the streaming twins declare their file-source schema with it."""
+    return _parquet_schema(f"{sf_dir}/{name}.parquet")
 
 
 def load(spark: "SparkSession", sf_dir: str, name: str) -> "DataFrame":
@@ -81,12 +72,7 @@ def load(spark: "SparkSession", sf_dir: str, name: str) -> "DataFrame":
         except Exception:  # pragma: no cover - frozen session wrapper
             pass
     path = f"{sf_dir}/{name}.parquet"
-    sch = _SCHEMA_MEMO.get(path)
-    if sch is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_MEMO[path] = df.schema
-    else:
-        df = spark.read.schema(sch).parquet(path)
+    df = spark.read.schema(_parquet_schema(path)).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # TIMESTAMP(NANOS) parquet read via nanosAsLong → convert to µs
         # timestamp exactly like DuckDB does (truncating division).

@@ -16,8 +16,10 @@ embeddings tables the driver ships for exactly this family.
 
 from __future__ import annotations
 
+from functools import cache
 from typing import TYPE_CHECKING
 
+from pyspark.sql import SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -26,7 +28,7 @@ from .queries_ext import _O_COS, _O_EMB
 from .operators.similarity import brute_force_topk, lsh_bucket_topk
 
 if TYPE_CHECKING:  # pragma: no cover
-    from pyspark.sql import DataFrame, SparkSession
+    from pyspark.sql import DataFrame
 
 #: BM25 free parameters (Robertson defaults) and the query term set —
 #: 'dup' is the rare, discriminative term; the other two are common
@@ -177,8 +179,17 @@ def inverted_index_postings(spark: "SparkSession", sf_dir: str) -> "DataFrame":
                      F.col("doc_id"))), ",").alias("postings")))
 
 
-#: index root → (postings schema, (N, Σdl)) — see _bm25_index memo note
-_INDEX_MEMO: dict = {}
+@cache  # construction memo (package docstring)
+def _bm25_index_meta(root: str) -> tuple:
+    """(postings schema, (N, Σdl)) of a staged BM25 index.  The root is
+    content-addressed (source digest × recipe digest —
+    ``stagecache.stage_once``), so both are immutable per root; without
+    the memo every build of bm25_from_postings / hybrid_search_rrf paid
+    two parquet footer-inference jobs plus a 1-row collect job before
+    the real query ran."""
+    read = SparkSession.active().read
+    st = read.parquet(f"{root}/stats").collect()[0]
+    return read.parquet(f"{root}/postings").schema, (st["n"], st["sumdl"])
 
 
 def _bm25_index(spark: "SparkSession", sf_dir: str):
@@ -213,23 +224,8 @@ def _bm25_index(spark: "SparkSession", sf_dir: str):
          .write.mode("overwrite").parquet(str(tmp / "stats")))
 
     root = stage_once(sf_dir, "documents", "bm25_index", _build)
-    # Per-process memo of the index schema and the 1-row stats
-    # (optimization r11): the root path is content-addressed
-    # (source digest × recipe digest — stagecache.stage_once), so both
-    # are immutable per root.  Without it every build of
-    # bm25_from_postings / hybrid_search_rrf paid two parquet
-    # footer-inference jobs plus a 1-row collect job before the real
-    # query ran; with it, later builds inline (N, Σdl) from the memo
-    # and read postings with an explicit schema — zero pre-query jobs.
-    memo = _INDEX_MEMO.get(str(root))
-    if memo is None:
-        p = spark.read.parquet(str(root / "postings"))
-        st = spark.read.parquet(str(root / "stats")).collect()[0]
-        memo = (p.schema, (st["n"], st["sumdl"]))
-        _INDEX_MEMO[str(root)] = memo
-    else:
-        p = spark.read.schema(memo[0]).parquet(str(root / "postings"))
-    return p, memo[1]
+    schema, stats = _bm25_index_meta(str(root))
+    return spark.read.schema(schema).parquet(str(root / "postings")), stats
 
 
 @q("bm25_from_postings", ("F9", "W3", "A1"), bench=True, oracle=_BM25_SQL)
@@ -253,7 +249,7 @@ def bm25_from_postings(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     # (N, Σdl) is a 1-row table — inlined as literals (bounded driver
     # scalars) rather than joined: index-time constants, and the
     # scalar join would be the plan's only nested-loop node.  The
-    # collect happens once per index root (_bm25_index memo).
+    # collect happens once per index root (_bm25_index_meta).
     p, (n_docs, sumdl) = _bm25_index(spark, sf_dir)
     p = p.filter(F.col("term").isin(*_BM25["terms"]))
     df_ = p.groupBy("term").agg(F.count("*").alias("df"))

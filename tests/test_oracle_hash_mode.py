@@ -7,11 +7,13 @@ outside the canonical set fall back instead of guessing."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import numpy as np
 import pyarrow as pa
 
-sys.path.insert(0, "/root/repo/tools")
+TOOLS = str(Path(__file__).resolve().parent.parent / "tools")
+sys.path.insert(0, TOOLS)
 
 from check_oracle import _hash_multiset  # noqa: E402
 
@@ -106,7 +108,7 @@ def test_cross_process_stability():
     import subprocess
 
     prog = (
-        "import sys; sys.path.insert(0,'/root/repo/tools')\n"
+        f"import sys; sys.path.insert(0,{TOOLS!r})\n"
         "import pyarrow as pa\n"
         "from check_oracle import _hash_multiset\n"
         "t = pa.table({'k':[1,2],'s':['a','b']})\n"

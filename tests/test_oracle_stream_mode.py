@@ -11,13 +11,15 @@ on a real session under the DEFAULT 1g maxResultSize."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import numpy as np
 import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-sys.path.insert(0, "/root/repo/tools")
+TOOLS = str(Path(__file__).resolve().parent.parent / "tools")
+sys.path.insert(0, TOOLS)
 
 from check_oracle import (  # noqa: E402
     _digest_add, _digest_new, _digests_differ, _duck_digest,

@@ -9,11 +9,13 @@ partitioned windows, the two-level prefix operator)."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo/tools")
+TOOLS = str(Path(__file__).resolve().parent.parent / "tools")
+sys.path.insert(0, TOOLS)
 
 from plan_lint import lint, parse_tree, plan_text as _plan  # noqa: E402
 

@@ -4,6 +4,7 @@ hold for arbitrary inputs, checked against simple Python references."""
 from __future__ import annotations
 
 from datetime import datetime, timedelta
+from pathlib import Path
 
 from hypothesis import HealthCheck, given, settings, strategies as st
 
@@ -541,7 +542,7 @@ def test_hash_multiset_is_permutation_invariant_and_injective_ish(rows):
     of rows hashes equal; dropping or duplicating one row (when
     non-empty) hashes different."""
     import sys
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
     import numpy as np
     import pyarrow as pa
     from check_oracle import _hash_multiset

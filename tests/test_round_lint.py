@@ -9,8 +9,10 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo/tools")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO / "tools"))
 
 from round_lint import ALLOW, scan_module_source, scan_oracle_sql  # noqa: E402
 
@@ -65,8 +67,8 @@ def test_oracle_rule_fires_and_handles_nesting():
 
 def test_repo_is_clean_at_head():
     out = subprocess.run(
-        [sys.executable, "/root/repo/tools/round_lint.py"],
-        capture_output=True, text=True, cwd="/root/repo")
+        [sys.executable, str(REPO / "tools" / "round_lint.py")],
+        capture_output=True, text=True, cwd=REPO)
     assert out.returncode == 0, out.stdout + out.stderr
     assert "0 violations" in out.stdout
 

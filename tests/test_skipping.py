@@ -5,12 +5,16 @@ pruning correctness (never drops rows), and the cluster→skip synergy
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from iot_simulator_datalake_spark.engine.maintenance import cluster
 from iot_simulator_datalake_spark.engine.skipping import (
     build_stats_manifest, prune_files, read_stats_manifest,
     scan_with_skipping)
+
+REPO = str(Path(__file__).resolve().parent.parent)
 
 
 def _write_interleaved(spark, path, n=20_000, files=12):
@@ -357,7 +361,7 @@ def test_recipe_digest_stable_across_processes():
     import sys
 
     prog = (
-        "import sys; sys.path.insert(0,'/root/repo')\n"
+        f"import sys; sys.path.insert(0,{REPO!r})\n"
         "from iot_simulator_datalake_spark.stagecache import"
         " _recipe_digest\n"
         "def b(work):\n"
@@ -409,7 +413,7 @@ def test_recipe_digest_canonicalizes_nested_frozensets():
     import sys
 
     prog = (
-        "import sys; sys.path.insert(0,'/root/repo')\n"
+        f"import sys; sys.path.insert(0,{REPO!r})\n"
         "from iot_simulator_datalake_spark.stagecache import"
         " _recipe_digest\n"
         "def b(work):\n"

@@ -6,8 +6,10 @@ from __future__ import annotations
 
 import json
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo/tools")
+TOOLS = str(Path(__file__).resolve().parent.parent / "tools")
+sys.path.insert(0, TOOLS)
 
 import x100_ledger as xl  # noqa: E402
 
@@ -103,7 +105,7 @@ def test_status_block_counts_partition_registry():
     """tools/status_block.py (r9): the README status numbers must come
     from the ledger + registry, and those must partition exactly."""
     import sys
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import status_block
     c = status_block.counts()
     assert c["registry"] == c["swept"] + c["excluded"] \

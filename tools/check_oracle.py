@@ -53,7 +53,7 @@ from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from iot_simulator_datalake_spark.queries import REGISTRY, TABLES  # noqa: E402
 from iot_simulator_datalake_spark.session import get_spark  # noqa: E402

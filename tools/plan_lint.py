@@ -27,9 +27,10 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from iot_simulator_datalake_spark.queries import REGISTRY  # noqa: E402
 from iot_simulator_datalake_spark.session import get_spark  # noqa: E402
@@ -142,7 +143,7 @@ SKIP_PREFIX = ("streaming_", "engine_", "simulator_streaming",
 
 def plan_text(df) -> str:
     """Formatted physical plan of a DataFrame — the ONE capture idiom
-    shared by the lint, dump_plans, and the lint self-tests."""
+    shared by the lint, `bench.py --plans`, and the lint self-tests."""
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")

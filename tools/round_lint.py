@@ -33,7 +33,7 @@ import pathlib
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / \
     "iot_simulator_datalake_spark"

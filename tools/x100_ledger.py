@@ -66,7 +66,7 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 LEDGER = pathlib.Path(__file__).resolve().parent.parent / \
     "X100_LEDGER.json"
